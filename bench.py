@@ -141,6 +141,18 @@ def main():
          / 65536.0 * 240.0).alias("lon"),
     ), "pts")
 
+    # every RDD persisted from here on is a round's snapshot (areas, idx,
+    # pairs, edges, geocode's `containing`); clearCache() does not free
+    # localCheckpoint blocks, so each round releases its own
+    jsc = spark.sparkContext._jsc
+    inputs = set(jsc.getPersistentRDDs().keys())
+
+    def release_round_snapshots():
+        rdds = jsc.getPersistentRDDs()
+        for k in list(rdds.keys()):
+            if k not in inputs:
+                rdds[k].unpersist(True)
+
     for _ in range(rounds):
         def f_pipeline():
             # scaled_documents_df emits only way+node docs — skip the
@@ -206,6 +218,7 @@ def main():
 
         timed("minhash_scaled", f_minhash_scaled)
         timed("cosine_scaled", f_cosine_scaled)
+        release_round_snapshots()
 
     extra["containment_areas_per_sec"] = round(
         extra["n_areas"] / timings["containment_graph"], 1)

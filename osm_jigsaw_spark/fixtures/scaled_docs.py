@@ -99,16 +99,18 @@ def hot_node_rects(spark: SparkSession, n_areas: int) -> DataFrame:
     n_areas-1 mutually disjoint small rects — so the mega is the DIRECT
     parent of every other area, the reference's >100k-children hot node
     (root README.md:159-161) taken to the limit. Disjoint small rects:
-    a 720x320 grid of 0.25°-wide cells, each rect inset 20%."""
+    one per cell of a 720x320 grid of 0.5°-wide cells, each rect inset 10%
+    on every side, so n_areas is at most 230,401."""
     grid_x, grid_y = 720, 320
+    if n_areas - 1 > grid_x * grid_y:
+        raise ValueError(
+            f"hot_node_rects holds at most {grid_x * grid_y + 1} areas, "
+            f"got {n_areas}: more small rects would nest, not stay disjoint")
     df = spark.range(n_areas - 1).select(F.col("id").alias("k"))
     df = df.withColumn("gx", F.col("k") % grid_x)
-    df = df.withColumn("gy", (F.col("k") / grid_x).cast("long") % grid_y)
-    # >1 area per grid cell only above 230k areas; keep rects disjoint by
-    # shrinking repeats into nested insets (still strictly inside the cell)
-    df = df.withColumn("rep", (F.col("k") / (grid_x * grid_y)).cast("long"))
+    df = df.withColumn("gy", (F.col("k") / grid_x).cast("long"))
     cw = F.lit(0.5)  # cell width/height in degrees
-    inset = (F.lit(0.1) + F.col("rep") * 0.02) * cw
+    inset = F.lit(0.1) * cw
     small = df.select(
         (F.col("k") + 1).alias("area_idx"),
         F.round(F.lit(-80.0) + F.col("gy") * cw + inset, 6).alias("min_lat"),

@@ -13,7 +13,10 @@ Re-expresses the reference stages `areaways` + `areas`
   (replacing MapDB lookups, resolving/NodeResolver.scala:18-50);
 - ring cleanup: drop consecutive duplicate joints + the closing vertex
   (open-ring convention; the reference keeps duplicates, which are
-  area/PIP-neutral — we normalize for exact hashing);
+  area/PIP-neutral — we normalize for exact hashing). One linear pass per
+  ring, evaluated once per ring in the ring-assembly aggregate: every
+  intermediate array is let-bound, never re-inlined per reference or per
+  element (real boundaries carry 10⁴–10⁵ vertices);
 - dedup: canonical-ring hash groupBy replaces the reference's O(n·w)
   equal-area + mutual-containment linear scan
   (RenderAndDeduplicateAreas.scala:82-101) — merged areas union their osm_ids.
@@ -27,10 +30,11 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.columns import let
 from ..functions.geometry import bbox_col, normalize_ring, shoelace_area_col
 from ..sources.documents import has_name
 from .relations import expansion_status, outer_way_ids
@@ -73,17 +77,43 @@ def relation_outlines(relations: DataFrame, ways: DataFrame) -> DataFrame:
 
 def _clean_ring_pts(pts):
     """Open-ring cleanup on an array<struct(lat,lon)> column: drop
-    consecutive duplicate joints, then the explicit closing vertex."""
-    # consecutive-duplicate removal (1-based element_at(pts, i) = predecessor)
-    deduped = F.filter(
-        pts, lambda x, i: (i == F.lit(0)) | (x != F.element_at(pts, i))
-    )
-    # drop closing vertex if ring is explicitly closed
-    return F.when(
-        (F.size(deduped) > 1)
-        & (F.element_at(deduped, 1) == F.element_at(deduped, -1)),
-        F.slice(deduped, 1, F.size(deduped) - 1),
-    ).otherwise(deduped)
+    consecutive duplicate joints, then the explicit closing vertex.
+
+    Linear time, evaluate once: ``pts`` and the deduplicated array are each
+    let-bound (functions/columns.let), so the predecessor lookup inside the
+    dedup ``filter`` reads a lambda variable in O(1) instead of rebuilding
+    ``pts`` per element, and no intermediate array is computed twice."""
+    def dedup(p):
+        # 1-based element_at(p, i) = predecessor of the 0-based element i
+        return F.filter(
+            p, lambda x, i: (i == F.lit(0)) | (x != F.element_at(p, i)))
+
+    def drop_closing(d):
+        return F.when(
+            (F.size(d) > 1) & (F.element_at(d, 1) == F.element_at(d, -1)),
+            F.slice(d, 1, F.size(d) - 1),
+        ).otherwise(d)
+
+    return let(let(pts, dedup), drop_closing)
+
+
+def _open_rings(grouped: GroupedData, pts) -> DataFrame:
+    """(osm_id, ring_index, lats, lons, n_points): the ordered points
+    ``pts`` of each (osm_id, ring_index) group, cleaned once.
+
+    ``pts`` is an aggregate expression and the cleanup runs in the
+    aggregate's result, one struct split by the projection above it. A
+    caller's filter on n_points therefore stops at the aggregate instead
+    of being pushed below a projection with the cleanup inlined into it,
+    and Catalyst does not collapse a non-cheap producer referenced three
+    times, so lats, lons and n_points all read the same evaluation."""
+    ring = let(_clean_ring_pts(pts), lambda o: F.struct(
+        F.transform(o, lambda s: s["lat"]).alias("lats"),
+        F.transform(o, lambda s: s["lon"]).alias("lons"),
+        F.size(o).alias("n_points"),
+    ))
+    return grouped.agg(ring.alias("ring")).select(
+        "osm_id", "ring_index", "ring.lats", "ring.lons", "ring.n_points")
 
 
 def resolve_outline_points(outlines: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -96,21 +126,10 @@ def resolve_outline_points(outlines: DataFrame, nodes: DataFrame) -> DataFrame:
         "osm_id", "ring_index", F.posexplode("node_ids").alias("seq", "node_id")
     )
     joined = exploded.join(nodes.select("node_id", "lat", "lon"), "node_id")
-    assembled = joined.groupBy("osm_id", "ring_index").agg(
-        F.array_sort(
-            F.collect_list(F.struct("seq", "lat", "lon"))
-        ).alias("pts_raw")
-    )
     pts = F.transform(
-        F.col("pts_raw"), lambda s: F.struct(s["lat"].alias("lat"), s["lon"].alias("lon"))
-    )
-    opened = _clean_ring_pts(pts)
-    return assembled.select(
-        "osm_id",
-        "ring_index",
-        F.transform(opened, lambda s: s["lat"]).alias("lats"),
-        F.transform(opened, lambda s: s["lon"]).alias("lons"),
-    ).withColumn("n_points", F.size("lats"))
+        F.array_sort(F.collect_list(F.struct("seq", "lat", "lon"))),
+        lambda s: F.struct(s["lat"].alias("lat"), s["lon"].alias("lon")))
+    return _open_rings(joined.groupBy("osm_id", "ring_index"), pts)
 
 
 def outline_way_refs(ways: DataFrame, relations: DataFrame) -> DataFrame:
@@ -178,23 +197,17 @@ def reassemble_outline_points(outline_refs: DataFrame,
         F.when(F.col("signed") < 0, F.reverse("lons"))
         .otherwise(F.col("lons")).alias("seg_lons"),
     )
-    assembled = j.groupBy("osm_id", "ring_index").agg(
-        F.array_sort(
-            F.collect_list(F.struct("pos", "seg_lats", "seg_lons"))
-        ).alias("segs")
-    )
-    lats = F.flatten(F.transform("segs", lambda s: s["seg_lats"]))
-    lons = F.flatten(F.transform("segs", lambda s: s["seg_lons"]))
-    pts = F.zip_with(
-        lats, lons,
-        lambda la, lo: F.struct(la.alias("lat"), lo.alias("lon")))
-    opened = _clean_ring_pts(pts)
-    return assembled.select(
-        "osm_id",
-        "ring_index",
-        F.transform(opened, lambda s: s["lat"]).alias("lats"),
-        F.transform(opened, lambda s: s["lon"]).alias("lons"),
-    ).withColumn("n_points", F.size("lats"))
+    def joined_segments(segs):
+        lats = F.flatten(F.transform(segs, lambda s: s["seg_lats"]))
+        lons = F.flatten(F.transform(segs, lambda s: s["seg_lons"]))
+        return F.zip_with(
+            lats, lons,
+            lambda la, lo: F.struct(la.alias("lat"), lo.alias("lon")))
+
+    segs = F.array_sort(
+        F.collect_list(F.struct("pos", "seg_lats", "seg_lons")))
+    return _open_rings(j.groupBy("osm_id", "ring_index"),
+                       let(segs, joined_segments))
 
 
 def area_tags(tags: DataFrame, areas: DataFrame) -> DataFrame:

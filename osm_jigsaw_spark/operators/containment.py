@@ -209,19 +209,28 @@ def node_depths(edges: DataFrame, max_depth: int = 64) -> DataFrame:
     per-level localCheckpoint (the reference's BFS-by-depth queue,
     GraphBuilder.scala:30-52, as a bounded driver loop)."""
     e = edges.select("parent_key", "child_key")
-    frontier = e.filter(F.col("parent_key") == ROOT_ID) \
-                .select(F.col("child_key").alias("area_key"), F.lit(1).alias("depth"))
-    all_depths = frontier
-    for _ in range(max_depth):
-        frontier = (
-            frontier.join(e, frontier["area_key"] == e["parent_key"])
+
+    def children(level: DataFrame) -> DataFrame:
+        return (
+            level.join(e, level["area_key"] == e["parent_key"])
             .select(F.col("child_key").alias("area_key"),
                     (F.col("depth") + 1).alias("depth"))
         )
+
+    frontier = e.filter(F.col("parent_key") == ROOT_ID) \
+                .select(F.col("child_key").alias("area_key"), F.lit(1).alias("depth"))
+    all_depths = frontier
+    for _ in range(max_depth - 1):
+        frontier = children(frontier)
         if frontier.isEmpty():
             break
         frontier = frontier.localCheckpoint(eager=True)
         all_depths = all_depths.unionByName(frontier)
+    else:
+        # a level past max_depth would be dropped: refuse instead
+        if not children(frontier).isEmpty():
+            raise RuntimeError(
+                f"containment graph is deeper than max_depth={max_depth}")
     return all_depths.groupBy("area_key").agg(F.max("depth").alias("depth"))
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.columns import let
 from ..plans.snapshots import snapshot
 from .textops import hash60, words_col
 
@@ -63,15 +64,11 @@ def shingle_arrays(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, shingles array<string>) — per-doc DISTINCT k-word shingles.
 
     Two scale-critical choices:
-    - the word array is LET-BOUND as the element of a one-element array
-      consumed by a transform lambda: every reference to the words inside
-      the shingling expression is the lambda variable, which Catalyst
-      cannot inline. A mere separate projection is NOT enough —
-      CollapseProject merges it into the consumer and re-evaluates the
-      full regex split at every reference, including once per shingle
-      position inside the per-position lambda: O(words²) per doc
-      (measured this round: 4 `split(` nodes in the collapsed physical
-      plan and a 2.5× end-to-end slowdown at 600k docs);
+    - the word array is let-bound (functions/columns.let): without it the
+      regex split re-runs at every reference, including once per shingle
+      position inside the per-position lambda — O(words²) per doc
+      (measured: 4 `split(` nodes in the collapsed physical plan and a
+      2.5× end-to-end slowdown at 600k docs);
     - dedup is per-document, so it is `array_distinct` INSIDE the row —
       a global `.distinct()` after explode would shuffle the entire
       shingle multiset (corpus-sized exchange + hash aggregate) to
@@ -86,8 +83,7 @@ def shingle_arrays(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    sh = F.element_at(
-        F.transform(F.array(words_col(F.col("text"))), shingles_of), 1)
+    sh = let(words_col(F.col("text")), shingles_of)
     return documents.select("doc_id", F.array_distinct(sh).alias("shingles"))
 
 

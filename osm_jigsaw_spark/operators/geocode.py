@@ -74,7 +74,8 @@ def geocode_paths(edges: DataFrame, containing: DataFrame,
 
     Output: (point_id, path array<string> of canonical osm_ids root-first,
     path_keys array<string>). Points inside no area produce no rows
-    (reference returns an empty path list).
+    (reference returns an empty path list). Raises RuntimeError if a path
+    is longer than max_depth areas.
     """
     pe = point_edges(edges, containing).localCheckpoint(eager=True)
     # renamed copies avoid self-join ambiguity in the iterative loop
@@ -119,6 +120,10 @@ def geocode_paths(edges: DataFrame, containing: DataFrame,
         ).select("point_id", "path", "path_keys")
         results = terminals if results is None else results.unionByName(terminals)
         frontier = ext
+    else:
+        if not frontier.isEmpty():
+            raise RuntimeError(
+                f"geocode paths are deeper than max_depth={max_depth}")
     if results is None:
         spark = edges.sparkSession
         return spark.createDataFrame(

@@ -3,7 +3,7 @@
 - enumerate_all_paths re-expresses the output module's full trace dump
   (osm-jigsaw-output/src/main/scala/Main.scala:27-70): every root-to-leaf
   path, grouped by leaf. Iterative frontier join bounded by graph depth,
-  lineage cut per level.
+  lineage cut per level; a graph deeper than the bound raises.
 - walk_path re-expresses the API's nodesFor id-chain follow
   (osm-jigsaw-api/app/controllers/Application.scala:79-106): validate a
   given root-first id chain edge by edge; the walk stops at the first
@@ -19,7 +19,9 @@ from .containment import ROOT_ID
 
 
 def enumerate_all_paths(edges: DataFrame, max_depth: int = 64) -> DataFrame:
-    """(leaf_osm_id, path array<string>) — all root-to-leaf traces."""
+    """(leaf_osm_id, path array<string>) — all root-to-leaf traces.
+
+    Raises RuntimeError if a path is longer than max_depth areas."""
     e = edges.select("parent_key", "child_key", "child_osm_id") \
         .localCheckpoint(eager=True)
     parents = e.select(F.col("parent_key").alias("pk")).distinct() \
@@ -48,6 +50,10 @@ def enumerate_all_paths(edges: DataFrame, max_depth: int = 64) -> DataFrame:
                 F.col("b_child").alias("node"),
                 F.array_append("path", F.col("b_osm")).alias("path"),
             )
+    else:
+        if not frontier.isEmpty():
+            raise RuntimeError(
+                f"containment paths are deeper than max_depth={max_depth}")
     if results is None:
         return edges.sparkSession.createDataFrame(
             [], "leaf_osm_id string, path array<string>")
